@@ -9,8 +9,9 @@ intersection (`geoEpic/soil/sda.py:59-100`) and zonal statistics
      (geo_epic_spark.cells — JVM-side, codegen),
   2. a cell equi-join produces candidates (broadcast when one side is small;
      salting + AQE handle dense-cell skew),
-  3. an Arrow-batched pandas UDF refines candidates (exact ray-cast PIP) or a
-     window ranks candidates by distance (kNN).
+  3. an exact ray-cast refine runs inside the join condition (``pip_expr``,
+     whole-stage codegen) or an aggregate/window ranks candidates by
+     distance (kNN).
 
 At 100 TB the expensive part is the shuffle of the big side, which happens
 exactly once on the cell key; the polygon/grid side is broadcast or
@@ -270,7 +271,6 @@ def nearest_grid_join(
     grid_lat: str = "lat",
     max_ring: int = 8,
     broadcast_grid: bool = True,
-    adaptive: bool = True,
     fallback: str = "brute",
 ) -> DataFrame:
     """Assign each point its k nearest grid rows (BallTree replacement,
@@ -280,28 +280,37 @@ def nearest_grid_join(
     Iterative k-ring expansion: probe the (2r+1)^2 cell block around each
     point's cell at r = 1, 2, 4, ... A candidate set is provably complete when
     the k-th best distance is below ``r * res`` (any grid point outside the
-    block is at least r*res degrees away in one axis); points that fail the
-    guarantee escalate to the next ring. Ties broken by (distance, grid_id)
-    — deterministic, unlike BallTree's insertion order.
+    block is at least r*res degrees away in one axis). Ties broken by
+    (distance, grid_id) — deterministic, unlike BallTree's insertion order.
+
+    Each ring round is one pass over the pending points: a left join onto
+    the ring-exploded grid (a point with no candidate keeps one row with
+    null grid columns), the best k candidates per point, and a per-point
+    ``resolved`` flag (k candidates found, the k-th inside the guarantee
+    radius). The round is checkpointed once; resolved rows go to the
+    output and the unresolved rows, taken with a filter, are the next
+    round's pending set. The round loop stops as soon as nothing is
+    pending, so a dense lattice runs one round and one emptiness probe.
 
     Output: point columns + ``grid_id``, ``nn_rank`` (1..k), ``nn_dist``
     (squared degrees for euclid_deg, km for haversine).
 
     fallback='brute' (default) matches BallTree semantics exactly: points
-    farther than ``max_ring`` rings from any grid cell are resolved by a
-    brute-force scan of the (broadcast) grid — the candidate set is the
-    whole grid, so *every* point gets its true k nearest regardless of
-    distance. fallback='drop' keeps only ring-resolved points (use with
-    max_ring=1 for the covered-raster fast path where the fallback branch
-    is provably empty and its plan weight is pure overhead).
+    still unresolved after ``max_ring`` rings are resolved by a brute-force
+    scan of the (broadcast) grid — the candidate set is the whole grid, so
+    *every* point gets its true k nearest regardless of distance. The brute
+    pass runs only over those points and is absent from the plan when
+    there are none. fallback='drop' keeps the final ring's best in-block
+    candidates unverified and drops points with none (use with max_ring=1
+    for the covered-raster fast path: one broadcast join, one
+    partial-aggregating min_by, no checkpoint and no extra action).
     """
     dist_fn = _dist2_deg if metric == "euclid_deg" else _haversine_km
     # max_ring=1 is the "covered raster" fast path (J2 nearest-pixel
     # sampling): when the grid spans the probe area at spacing == res, the
     # 3x3 ring-1 block provably contains the nearest lattice point
-    # (|dx|,|dy| <= spacing/2 < res), so the guarantee check and the
-    # pending-work anti-join are skipped entirely — one broadcast join, one
-    # partial-aggregating min_by, no extra action.
+    # (|dx|,|dy| <= spacing/2 < res), so with fallback='drop' the guarantee
+    # check is skipped entirely.
     # guarantee radius in the distance's own units
     def guard(r: int) -> Column:
         if metric == "euclid_deg":
@@ -325,17 +334,71 @@ def nearest_grid_join(
         F.col(grid_lat).alias("__glat"),
         cells.cell_id(F.col(grid_lon), F.col(grid_lat), res).alias("__gcell"),
     )
-
-    pending = points.withColumn(
-        "__pcell", cells.cell_id(F.col(point_lon), F.col(point_lat), res)
-    )
     point_cols = points.columns
-    # window/anti-join key: a unique point id keeps the shuffle key narrow;
-    # falling back to all point columns is correct but wider.
+    # window key: a unique point id keeps the shuffle key narrow; falling
+    # back to all point columns is correct but wider.
     key_cols = [point_id] if point_id else point_cols
+    by_point = Window.partitionBy(*[F.col(c) for c in key_cols])
+
+    def best_k(cand: DataFrame) -> DataFrame:
+        """The k best candidates per point as (point cols, __gid, __rk, __d);
+        a point whose candidates are all null keeps one row with null
+        __gid/__d."""
+        d = F.col("__d")
+        gid = F.col("__gid")
+        if k == 1:
+            # min_by aggregation gets map-side partial aggregation (one
+            # surviving row per point per input partition) instead of the
+            # full candidate shuffle a row_number window needs. The ordering
+            # is null for a no-candidate row so min_by skips it: a
+            # struct(null, null) is not null and would sort first.
+            best = cand.groupBy(*[F.col(c) for c in point_cols]).agg(
+                F.min_by(
+                    F.struct(gid, d), F.when(gid.isNotNull(), F.struct(d, gid))
+                ).alias("__b")
+            )
+            return best.select(
+                *point_cols,
+                F.col("__b.__gid").alias("__gid"),
+                F.lit(1).alias("__rk"),
+                F.col("__b.__d").alias("__d"),
+            )
+        w = by_point.orderBy(d.asc_nulls_last(), gid.asc_nulls_last())
+        return cand.withColumn("__rk", F.row_number().over(w)).filter(
+            F.col("__rk") <= k
+        )
+
+    def resolved(r: int) -> Column:
+        """A point is complete iff it has k candidates and the k-th best is
+        inside the guarantee radius."""
+        if k == 1:
+            ok = F.col("__d") < guard(r)
+        else:
+            ok = (F.count("__gid").over(by_point) >= k) & (
+                F.max("__d").over(by_point) < guard(r)
+            )
+        return F.coalesce(ok, F.lit(False))
+
+    def emit(df: DataFrame) -> DataFrame:
+        return df.select(
+            *point_cols,
+            F.col("__gid").alias(grid_id),
+            F.col("__rk").alias("nn_rank"),
+            F.col("__d").alias("nn_dist"),
+        )
+
+    def with_dist(cand: DataFrame) -> DataFrame:
+        return cand.withColumn(
+            "__d",
+            dist_fn(F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")),
+        )
+
     results: list[DataFrame] = []
+    pending: DataFrame | None = points
     r = 1
     while True:
+        final_ring = r >= max_ring
+        pcell = cells.cell_id(F.col(point_lon), F.col(point_lat), res)
         # Chebyshev symmetry: point-cell within ring r of grid-cell iff the
         # reverse holds — so expand whichever side is cheaper. Small rings
         # explode the (broadcast) grid side, leaving the big point stream
@@ -345,147 +408,50 @@ def nearest_grid_join(
             g_r = F.broadcast(
                 g.withColumn("__cell", F.explode(cells.k_ring(F.col("__gcell"), r)))
             )
-            probe = pending.withColumn("__cell", F.col("__pcell"))
+            probe = pending.withColumn("__cell", pcell)
         else:
             g_r = _maybe_broadcast(
                 g.withColumn("__cell", F.col("__gcell")), broadcast_grid
             )
-            probe = pending.withColumn(
-                "__cell", F.explode(cells.k_ring(F.col("__pcell"), r))
-            )
-        cand = probe.join(g_r.drop("__gcell"), "__cell", "inner").withColumn(
-            "__d",
-            dist_fn(F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")),
-        )
-        final_ring = r >= max_ring
-        # At the final ring, keeping unverified candidates is only sound for
-        # fallback='drop' (documented best-within-block semantics). For
-        # fallback='brute' the guard check still applies: a point whose best
-        # in-block candidate sits at >= guard(max_ring) may have a closer
-        # grid point just outside the block (diagonal corner ~1.41*r*res),
-        # and a k>1 point with < k in-block candidates is short — both must
-        # fall through to the brute pass for BallTree-exact results.
-        keep_unverified = final_ring and fallback != "brute"
-        if k == 1:
-            # k=1 fast path: min_by aggregation gets map-side partial
-            # aggregation (one surviving row per point per input partition)
-            # instead of the full candidate shuffle a row_number window needs.
-            best = cand.groupBy(*[F.col(c) for c in point_cols]).agg(
-                F.min_by(
-                    F.struct(F.col("__gid"), F.col("__d")),
-                    F.struct(F.col("__d"), F.col("__gid")),
-                ).alias("__b")
-            )
-            topk = best.select(
-                *point_cols,
-                F.col("__b.__gid").alias("__gid"),
-                F.lit(1).alias("__rk"),
-                F.col("__b.__d").alias("__d"),
-            )
-            done = topk if keep_unverified else topk.filter(F.col("__d") < guard(r))
-        else:
-            w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-                F.col("__d").asc(), F.col("__gid").asc()
-            )
-            topk = (
-                cand.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") <= k)
-            )
-            if keep_unverified:
-                done = topk
-            else:
-                # complete iff we found k candidates AND the worst is inside
-                # the guarantee radius
-                w2 = Window.partitionBy(*[F.col(c) for c in key_cols])
-                topk = topk.withColumn("__kmax", F.max("__d").over(w2)).withColumn(
-                    "__kcnt", F.count(F.lit(1)).over(w2)
-                )
-                done = topk.filter(
-                    (F.col("__kcnt") >= k) & (F.col("__kmax") < guard(r))
-                ).drop("__kmax", "__kcnt")
-        results.append(
-            done.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-        )
+            probe = pending.withColumn("__cell", F.explode(cells.k_ring(pcell, r)))
+        # fallback='drop': the final ring keeps its best in-block candidates
+        # unverified, so points without one simply drop out of an inner
+        # join — no flag, no checkpoint, no union branch.
+        unverified = final_ring and fallback != "brute"
+        cand = with_dist(probe.join(
+            g_r.drop("__gcell"), "__cell", "inner" if unverified else "left"
+        ))
+        if unverified:
+            results.append(best_k(cand))
+            pending = None
+            break
+        # At the final ring with fallback='brute' the guard still applies: a
+        # point whose best in-block candidate sits at >= guard(max_ring) may
+        # have a closer grid point just outside the block (diagonal corner
+        # ~1.41*r*res), and a k>1 point with < k in-block candidates is
+        # short — both go on to the brute pass for BallTree-exact results.
+        # One eager localCheckpoint per round feeds both the output and the
+        # next pending set; its blocks are freed by the ContextCleaner once
+        # the returned DataFrame is garbage-collected.
+        rnd = best_k(cand).withColumn("__ok", resolved(r)).localCheckpoint(eager=True)
+        results.append(rnd.filter(F.col("__ok")))
+        # a point owns exactly one rank-1 row, resolved or not
+        pending = rnd.filter(~F.col("__ok") & (F.col("__rk") == 1)).select(*point_cols)
+        if pending.isEmpty():
+            pending = None
+            break
         if final_ring:
             break
-        if adaptive:
-            # materialize this round and probe for stragglers: dense lattices
-            # finish in one round, so paying one count() action here beats
-            # shipping a 4-round chained plan of anti-joins that all turn out
-            # empty (measured 3x on the bench grid). Shared via lazily-cleaned
-            # localCheckpoint, not cache(): checkpoint blocks are freed by the
-            # ContextCleaner when the DataFrame is GC'd, so repeated adaptive
-            # calls in a long session don't leak storage (same lifecycle as
-            # dedup.minhash_lsh_pairs).
-            done = done.localCheckpoint(eager=False)
-            results[-1] = done.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-            pending_next = pending.join(
-                done.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-            )
-            if pending_next.isEmpty():
-                break
-            pending = pending_next
-        else:
-            pending = pending.join(
-                done.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-            )
         r *= 2
 
-    out = results[0]
+    out = emit(results[0])
     for df in results[1:]:
-        out = out.unionByName(df)
-    if fallback == "brute":
-        # BallTree-exact completion: points with no candidate within
-        # max_ring rings scan the whole (broadcast) grid. The branch is
-        # lazily empty when the rings resolved everything — its cost is one
-        # anti-join over the final pending set.
-        rest = pending.join(
-            results[-1].select(*key_cols).distinct(), on=key_cols, how="left_anti"
-        ).drop("__pcell")
-        bcand = rest.crossJoin(
-            _maybe_broadcast(g.drop("__gcell"), broadcast_grid)
-        ).withColumn(
-            "__d",
-            dist_fn(F.col(point_lon), F.col(point_lat), F.col("__glon"), F.col("__glat")),
-        )
-        if k == 1:
-            bbest = bcand.groupBy(*[F.col(c) for c in point_cols]).agg(
-                F.min_by(
-                    F.struct(F.col("__gid"), F.col("__d")),
-                    F.struct(F.col("__d"), F.col("__gid")),
-                ).alias("__b")
-            )
-            btop = bbest.select(
-                *point_cols,
-                F.col("__b.__gid").alias("__gid"),
-                F.lit(1).alias("__rk"),
-                F.col("__b.__d").alias("__d"),
-            )
-        else:
-            bw = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(
-                F.col("__d").asc(), F.col("__gid").asc()
-            )
-            btop = bcand.withColumn("__rk", F.row_number().over(bw)).filter(
-                F.col("__rk") <= k
-            )
-        out = out.unionByName(
-            btop.select(
-                *point_cols,
-                F.col("__gid").alias(grid_id),
-                F.col("__rk").alias("nn_rank"),
-                F.col("__d").alias("nn_dist"),
-            )
-        )
+        out = out.unionByName(emit(df))
+    if pending is not None:
+        # BallTree-exact completion: points unresolved after max_ring rings
+        # scan the whole (broadcast) grid.
+        brute = pending.crossJoin(_maybe_broadcast(g.drop("__gcell"), broadcast_grid))
+        out = out.unionByName(emit(best_k(with_dist(brute))))
     return out
 
 

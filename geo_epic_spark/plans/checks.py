@@ -20,6 +20,31 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
+def executed_plans(spark, action) -> list[str]:
+    """Run ``action()`` and return the physical-plan description of every
+    SQL execution it ran, read from the SQL status store (final plans under
+    AQE). For operators that run jobs while building their result — a
+    checkpointed round — the returned DataFrame's own plan no longer shows
+    the joins that did the work."""
+    store = spark._jsparkSession.sharedState().statusStore()  # noqa: SLF001
+    bus = spark.sparkContext._jsc.sc().listenerBus()  # noqa: SLF001
+
+    def last_id() -> int:
+        execs = store.executionsList()
+        return int(execs.last().executionId()) if execs.nonEmpty() else -1
+
+    bus.waitUntilEmpty()
+    first = last_id() + 1
+    action()
+    bus.waitUntilEmpty()
+    plans = []
+    for eid in range(first, last_id() + 1):
+        ex = store.execution(eid)
+        if ex.isDefined():
+            plans.append(ex.get().physicalPlanDescription())
+    return plans
+
+
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 

@@ -1,7 +1,8 @@
 """Physical-plan shape pins: the 100 TB-critical properties must hold.
 
 - flagship PIP join: broadcast hash join, zero shuffle of the image stream
-- nearest-grid join ring-1: broadcast join for the candidate stage
+- nearest-grid join ring-1: broadcast join for the candidate stage, no
+  anti-join; the covered-raster fast path is one broadcast join, no union
 - parquet scans: predicate pushdown + column pruning reach the scan
 - whole-stage codegen present on the hot path
 """
@@ -11,9 +12,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from geo_epic_spark import synth
-from geo_epic_spark.operators.spatial import pip_join
+from geo_epic_spark.operators.spatial import nearest_grid_join, pip_join
 from geo_epic_spark.plans.checks import (
     codegen_stage_count,
+    executed_plans,
     formatted_plan,
     has_broadcast_hash_join,
     pushed_filters,
@@ -30,6 +32,37 @@ def test_pip_join_is_broadcast_and_shuffle_free(spark):
     # the image stream must not shuffle: broadcast exchanges only
     assert shuffle_free(out)
     assert codegen_stage_count(out) >= 1
+
+
+def test_nearest_grid_ring1_is_broadcast_without_anti_join(spark):
+    """A lattice that resolves every point in ring 1 runs one round: a
+    broadcast join for the candidates, an emptiness probe over the
+    checkpointed round, and no anti-join or brute-force cross join in any
+    job it runs (the returned frame reads the checkpoint, so the jobs'
+    plans are inspected, not its own)."""
+    imgs = synth.images_meta_df(spark, 1000).select("i", "cx", "cy")
+    grid = synth.grid_df(spark, 25, 40, 0.125)
+    plans = "\n".join(executed_plans(spark, lambda: nearest_grid_join(
+        imgs, grid, res=0.125, point_id="i", point_lon="cx", point_lat="cy",
+    ).collect()))
+    assert "BroadcastHashJoin" in plans, plans
+    assert "LeftAnti" not in plans, plans
+    assert "NestedLoopJoin" not in plans and "CartesianProduct" not in plans, plans
+
+
+def test_nearest_grid_covered_raster_fast_path(spark):
+    """max_ring=1 + fallback='drop' compiles to exactly one broadcast join
+    and no union: no resolved flag, no checkpoint, no fallback branch."""
+    import re
+
+    imgs = synth.images_meta_df(spark, 1000).select("i", "cx", "cy")
+    grid = synth.grid_df(spark, 25, 40, 0.125)
+    plan = formatted_plan(nearest_grid_join(
+        imgs, grid, res=0.125, point_id="i", point_lon="cx", point_lat="cy",
+        max_ring=1, fallback="drop",
+    ))
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_parquet_scan_pushdown_and_pruning(spark, tmp_path):

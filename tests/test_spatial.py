@@ -7,7 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from geo_epic_spark import cells, synth
-from geo_epic_spark.geometry import points_in_polygon
+from geo_epic_spark.geometry import haversine_km, points_in_polygon
 from geo_epic_spark.operators.spatial import (
     nearest_grid_join,
     pip_join,
@@ -15,6 +15,7 @@ from geo_epic_spark.operators.spatial import (
     vectorize,
     zonal_stats,
 )
+from geo_epic_spark.plans.checks import executed_plans
 
 N_IMG = 1200
 N_POLY = 60
@@ -73,6 +74,18 @@ def test_pip_general_polygon(spark):
     assert got == {2, 3}
 
 
+def _np_knn(lon, lat, gid, glon, glat, k, metric="euclid_deg"):
+    """Brute-force k nearest grid rows per point: numpy lexsort on
+    (distance, grid_id), the engine's tie order. Returns (ids, dists), each
+    of shape (n_points, k)."""
+    if metric == "euclid_deg":
+        d = (lon[:, None] - glon[None, :]) ** 2 + (lat[:, None] - glat[None, :]) ** 2
+    else:
+        d = haversine_km(lon[:, None], lat[:, None], glon[None, :], glat[None, :])
+    order = np.array([np.lexsort((gid, row))[:k] for row in d])
+    return gid[order], np.take_along_axis(d, order, axis=1)
+
+
 def test_nearest_grid_join_vs_balltree_semantics(spark, imgs):
     grid = synth.grid_df(spark, 25, 40, 0.125)
     got = (
@@ -82,13 +95,138 @@ def test_nearest_grid_join_vs_balltree_semantics(spark, imgs):
         .sort_values("i")
     )
     m = _np_meta()
-    gp = grid.toPandas().sort_values("grid_id")
-    d2 = (m["cx"][:, None] - gp.lon.values[None, :]) ** 2 + (
-        m["cy"][:, None] - gp.lat.values[None, :]
-    ) ** 2
-    want = gp.grid_id.values[d2.argmin(axis=1)]  # ties: lowest grid_id (sorted)
+    gp = grid.toPandas()
+    want, _ = _np_knn(m["cx"], m["cy"], gp.grid_id.to_numpy(), gp.lon.to_numpy(),
+                      gp.lat.to_numpy(), k=1)
     assert len(got) == N_IMG
-    assert np.array_equal(got.grid_id.to_numpy(), want)
+    assert np.array_equal(got.grid_id.to_numpy(), want[:, 0])
+
+
+_KNN_RES, _KNN_MAX_RING = 0.1, 4
+
+
+def _knn_fixture(seed):
+    """A jittered 24x24 lattice at spacing == res with a 9x9-cell hole and
+    shuffled grid ids, plus 100 points: 60 over the lattice (mostly resolved
+    in ring 1), 30 inside the hole (no ring-1 candidate; resolved in ring 2
+    or 4, or by brute force at the hole's centre) and 10 more than a degree
+    east of it (no candidate within max_ring rings: brute force)."""
+    rng = np.random.default_rng(seed)
+    nr = nc = 24
+    lon0, lat0 = -97.0 + rng.uniform(-1, 1), 38.0 + rng.uniform(-1, 1)
+    rr, cc = np.divmod(np.arange(nr * nc), nc)
+    hole = (np.abs(rr - 12) <= 4) & (np.abs(cc - 12) <= 4)
+    glon = lon0 + (cc + 0.5 + rng.uniform(-0.1, 0.1, nr * nc)) * _KNN_RES
+    glat = lat0 + (rr + 0.5 + rng.uniform(-0.1, 0.1, nr * nc)) * _KNN_RES
+    gid = rng.permutation(nr * nc)
+    span = nr * _KNN_RES
+    lon = np.concatenate([lon0 + rng.uniform(0, span, 60),
+                          lon0 + rng.uniform(7.5, 16.5, 30) * _KNN_RES,
+                          lon0 + span + rng.uniform(1, 3, 10)])
+    lat = np.concatenate([lat0 + rng.uniform(0, span, 60),
+                          lat0 + rng.uniform(7.5, 16.5, 30) * _KNN_RES,
+                          lat0 + rng.uniform(0, span, 10)])
+    return (gid[~hole], glon[~hole], glat[~hole]), (lon, lat)
+
+
+def _knn_frames(spark, grid, lon, lat):
+    gid, glon, glat = grid
+    pts = spark.createDataFrame(
+        pd.DataFrame({"i": np.arange(len(lon)), "lon": lon, "lat": lat}),
+        "i long, lon double, lat double",
+    )
+    g = spark.createDataFrame(
+        pd.DataFrame({"grid_id": gid, "lon": glon, "lat": glat}),
+        "grid_id long, lon double, lat double",
+    )
+    return pts, g
+
+
+def _np_resolving_ring(lon, lat, grid, k, metric):
+    """The ring (1, 2, 4) whose block first holds k candidates with the k-th
+    inside the guarantee radius, else 'brute' — a numpy replay of
+    nearest_grid_join's escalation, used to prove the fixture covers every
+    round."""
+    gid, glon, glat = grid
+    shift = 2**32
+    pc = cells.np_cell_id(lon, lat, _KNN_RES)
+    gc = cells.np_cell_id(glon, glat, _KNN_RES)
+    out = []
+    for x, y, c in zip(lon, lat, pc):
+        cheb = np.maximum(np.abs(gc // shift - c // shift), np.abs(gc % shift - c % shift))
+        if metric == "euclid_deg":
+            d = (glon - x) ** 2 + (glat - y) ** 2
+        else:
+            d = haversine_km(x, y, glon, glat)
+        r = 1
+        while r <= _KNN_MAX_RING:
+            if metric == "euclid_deg":
+                guard = (r * _KNN_RES) ** 2
+            else:
+                lat_max = min(abs(y) + r * _KNN_RES, 89.9)
+                km_per_deg = min(110.574, 111.32 * np.cos(np.radians(lat_max)))
+                guard = r * _KNN_RES * 0.99 * km_per_deg
+            ds = np.sort(d[cheb <= r])
+            if len(ds) >= k and ds[k - 1] < guard:
+                break
+            r *= 2
+        out.append(r if r <= _KNN_MAX_RING else "brute")
+    return out
+
+
+@pytest.mark.parametrize("metric", ["euclid_deg", "haversine"])
+@pytest.mark.parametrize("k", [1, 3])
+@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
+def test_nearest_grid_join_seeded_parity(spark, seed, k, metric):
+    """Row-for-row parity with the numpy lexsort oracle across seeds, for
+    points resolved in ring 1, in ring 2 or 4, and by the brute-force pass."""
+    grid, (lon, lat) = _knn_fixture(seed)
+    rings = set(_np_resolving_ring(lon, lat, grid, k, metric))
+    assert {1, "brute"} <= rings and rings & {2, 4}, rings
+    gid, glon, glat = grid
+    pts, g = _knn_frames(spark, grid, lon, lat)
+    got = (
+        nearest_grid_join(
+            pts, g, res=_KNN_RES, k=k, metric=metric, max_ring=_KNN_MAX_RING,
+            # odd seeds key the window/grouping on the id, even seeds on
+            # all point columns
+            point_id="i" if seed % 2 else None,
+        )
+        .toPandas()
+        .sort_values(["i", "nn_rank"])
+    )
+    want_ids, want_d = _np_knn(lon, lat, gid, glon, glat, k, metric)
+    assert len(got) == len(lon) * k
+    assert (got.nn_rank.to_numpy().reshape(-1, k) == np.arange(1, k + 1)).all()
+    assert np.array_equal(got.grid_id.to_numpy().reshape(-1, k), want_ids)
+    d = got.nn_dist.to_numpy().reshape(-1, k)
+    if metric == "euclid_deg":
+        assert np.array_equal(d, want_d)  # same arithmetic: bit-identical
+    else:
+        np.testing.assert_allclose(d, want_d, rtol=1e-9)
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_nearest_grid_ring_escalation_skips_brute_pass(spark, k):
+    """Points that resolve in ring 2 or 4 never reach the brute-force pass,
+    which is then absent from every job. Ring 4 explodes the point side, so
+    a point's candidate rows mix with null no-candidate rows; a null must
+    never rank ahead of a real candidate, or the point would fall through
+    to the brute pass."""
+    grid, (lon, lat) = _knn_fixture(0)
+    rings = np.array(_np_resolving_ring(lon, lat, grid, k, "euclid_deg"), dtype=object)
+    keep = (rings == 2) | (rings == 4)
+    assert (rings == 4).any()
+    lon, lat = lon[keep], lat[keep]
+    gid, glon, glat = grid
+    pts, g = _knn_frames(spark, grid, lon, lat)
+    got = []
+    plans = executed_plans(spark, lambda: got.append(nearest_grid_join(
+        pts, g, res=_KNN_RES, k=k, point_id="i", max_ring=_KNN_MAX_RING,
+    ).toPandas().sort_values(["i", "nn_rank"])))
+    assert not any("NestedLoopJoin" in p for p in plans)
+    want_ids, _ = _np_knn(lon, lat, gid, glon, glat, k)
+    assert np.array_equal(got[0].grid_id.to_numpy().reshape(-1, k), want_ids)
 
 
 def test_nearest_k3(spark, imgs):
